@@ -371,13 +371,16 @@ object FlsCdf {
     * immutable the same range replans IDENTICALLY on restart (the
     * manifest log is the stream's write-ahead log). */
   private[connector] def planUnits(conf: Configuration, dir: String,
-      from: Long, to: Long, dataSchema: StructType): Seq[FlsRgUnit] = {
+      from: Long, to: Long, fullSchema: StructType,
+      sizeVirtuals: Map[String, String]): Seq[FlsRgUnit] = {
+    // schema the file columns bind against (renames, widenings) —
+    // everything but the two feed columns
+    val dataSchema = StructType(fullSchema.fields.filterNot(f =>
+      f.name == ChangeType || f.name == CommitVersion))
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     val qdir = fs.makeQualified(root).toString.stripSuffix("/") + "/"
-    val units = scala.collection.mutable.ArrayBuffer[FlsRgUnit]()
-    var fileIdx = 0
-    planBranches(fs, root, dir, from, to).foreach { br =>
+    val files = planBranches(fs, root, dir, from, to).flatMap { br =>
       val listed = FlsFooters.listStatuses(Seq(dir), conf, Some(br.scanVersion))
       val byRel = listed.map { case (st, meta) =>
         st.getPath.toString.stripPrefix(qdir) -> (st, meta)
@@ -392,23 +395,18 @@ object FlsCdf {
       val entries = FlsFooters.fetchMeta(specs.map(s => byRel(s.rel)), conf)
         .map(e => e.copy(table = Format.applyRenames(e.table, dataSchema)))
       val disc = FlsPartitioning.discover(Seq(dir), entries.map(_.file), conf)
-      specs.zip(entries).foreach { case (spec, e) =>
-        val pvals: Map[String, String] = disc.pvalsOf(e.file.toString)
-        val cdf = FlsCdfChunkSpec(br.changeType, br.commitVersion, spec.emitDiff)
+      specs.zip(entries).map { case (spec, e) =>
         // emit-mode chunks must NOT also exclude the live DV: the diff
         // IS the (exact) selection; live-row chunks keep their version's
-        // DV so already-deleted rows never resurrect in the feed
-        val dv = if (spec.emitDiff.isDefined) None else e.dv
-        var rowStart = 0L
-        e.table.rowGroups.foreach { rg =>
-          units += FlsRgUnit(e.file.toString, rg, rowStart, fileIdx, pvals,
-            e.table.columns, dv, Some(cdf))
-          rowStart += rg.nTuples
-        }
-        fileIdx += 1
+        // DV so already-deleted rows never resurrect in the feed;
+        // equality residuals are not applied to feed chunks
+        FlsPlanFile(e, disc).copy(eq = Nil,
+          dv = if (spec.emitDiff.isDefined) None else e.dv,
+          cdf = Some(FlsCdfChunkSpec(br.changeType, br.commitVersion, spec.emitDiff)))
       }
     }
-    units.toSeq
+    // no pushed filters: the feed is change-sized, filters run above it
+    FlsScanPlanner.plan(files, Array.empty, Map.empty, sizeVirtuals)
   }
 }
 
@@ -465,6 +463,7 @@ class FlsCdfScan(fullSchema: StructType, requiredSchema: StructType,
 
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
+  private val readOptions = FlsReadOptions.parse(options)
 
   override def description(): String = {
     val from = Option(options.get(FlsCdf.FromOption)).getOrElse(FlsCdf.Earliest)
@@ -493,13 +492,8 @@ class FlsCdfScan(fullSchema: StructType, requiredSchema: StructType,
       s"fls cdf: from_version=$from is newer than the target version $to")
     require(to <= headV,
       s"fls cdf: to_version=$to is beyond the newest version $headV")
-
-    // schema the file columns bind against (renames, widenings) —
-    // everything but the two feed columns
-    val dataSchema = StructType(fullSchema.fields.filterNot(f =>
-      f.name == FlsCdf.ChangeType || f.name == FlsCdf.CommitVersion))
-    FlsSplitPacking.pack(
-      FlsCdf.planUnits(conf, dir, from, to, dataSchema), session)
+    FlsSplitPacking.pack(FlsCdf.planUnits(conf, dir, from, to, fullSchema,
+      readOptions.sizeVirtuals), session)
   }
 
   /** Streaming read of the feed: the manifest VERSION is the offset —
@@ -509,6 +503,5 @@ class FlsCdfScan(fullSchema: StructType, requiredSchema: StructType,
     new FlsCdfMicroBatchStream(fullSchema, requiredSchema, options, session)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema,
-      new SerializableConfiguration(hadoopConf))
+    new FlsReaderFactory(requiredSchema, new SerializableConfiguration(hadoopConf), readOptions)
 }

@@ -67,6 +67,7 @@ class FlsCdfMicroBatchStream(
     s"fls cdf stream: the change-data-feed addresses ONE table directory, " +
       s"got ${paths.length}")
   private val dir = paths.head
+  private val readOptions = FlsReadOptions.parse(options)
 
   /** Versions per micro-batch (0 = unlimited): bounds a catch-up burst
     * so a consumer resuming N commits behind drains as N/cap batches. */
@@ -132,15 +133,12 @@ class FlsCdfMicroBatchStream(
     val s = start.asInstanceOf[FlsCdfOffset].version
     val e = end.asInstanceOf[FlsCdfOffset].version
     if (e <= s) return Array.empty
-    val dataSchema = StructType(fullSchema.fields.filterNot(f =>
-      f.name == FlsCdf.ChangeType || f.name == FlsCdf.CommitVersion))
-    FlsSplitPacking.pack(
-      FlsCdf.planUnits(hadoopConf, dir, s, e, dataSchema), session)
+    FlsSplitPacking.pack(FlsCdf.planUnits(hadoopConf, dir, s, e, fullSchema,
+      readOptions.sizeVirtuals), session)
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema,
-      new SerializableConfiguration(hadoopConf))
+    new FlsReaderFactory(requiredSchema, new SerializableConfiguration(hadoopConf), readOptions)
 
   /** Nothing to do: the manifest log is the WAL and Spark's own offset
     * log is the cursor — this source holds no files to compact. */

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.fls._
 
@@ -35,10 +35,10 @@ case class FlsOffset(batchId: Long) extends Offset {
   * that a job rollback deleted anyway is skipped with a warning (its
   * data was never committed).
   *
-  * Each logged file plans like the batch path: one InputPartition per
-  * row group, descriptors serialized into the partition, partition
-  * columns parsed from the path, pushed filters applied as zone-map +
-  * partition pruning. */
+  * Each logged file plans through the batch path's planner
+  * ([[FlsScanPlanner]]): partition columns parsed from the path, pushed
+  * filters applied as partition + zone-map pruning, row groups packed
+  * into splits with their descriptors serialized in. */
 class FlsMicroBatchStream(
     tableSchema: StructType,
     requiredSchema: StructType,
@@ -59,6 +59,7 @@ class FlsMicroBatchStream(
     * freezes the file set at prepare time and loops batches until that
     * set is drained. */
   private val maxFilesPerTrigger = options.getInt("max_files_per_trigger", 0)
+  private val readOptions = FlsReadOptions.parse(options)
   private var availableNowTarget: Set[String] = null
 
   private def hadoopConf: Configuration =
@@ -117,18 +118,11 @@ class FlsMicroBatchStream(
     }
   }
 
-  private def readCompact(p: Path): Seq[(String, Long)] = {
-    val fs = p.getFileSystem(hadoopConf)
-    val st = fs.getFileStatus(p)
-    val buf = new Array[Byte](st.getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      .split('\n').filter(_.nonEmpty).toSeq.map { l =>
-        val tab = l.indexOf('\t')
-        (l.substring(tab + 1), l.substring(0, tab).toLong)
-      }
-  }
+  private def readCompact(p: Path): Seq[(String, Long)] =
+    readLines(p).map { l =>
+      val tab = l.indexOf('\t')
+      (l.substring(tab + 1), l.substring(0, tab).toLong)
+    }
 
   /** `<path>` (pre-DV logs and DV-less files), `<path>\t<dvAbs>`, or —
     * since equality deletes — `<path>\t<dvAbs | '-'>\t<eqJson>...`
@@ -141,9 +135,10 @@ class FlsMicroBatchStream(
     (fields(0), dv, fields.drop(2).toSeq)
   }
 
-  private def readLog(id: Long): Seq[String] = {
-    val fs = logDir.getFileSystem(hadoopConf)
-    val p = new Path(logDir, id.toString)
+  private def readLog(id: Long): Seq[String] = readLines(new Path(logDir, id.toString))
+
+  private def readLines(p: Path): Seq[String] = {
+    val fs = p.getFileSystem(hadoopConf)
     val st = fs.getFileStatus(p)
     val buf = new Array[Byte](st.getLen.toInt)
     val in = fs.open(p)
@@ -255,12 +250,8 @@ class FlsMicroBatchStream(
     val conf = hadoopConf
     val logged = ((s + 1) to e).flatMap(readLog).map(parseLogLine)
     val files = logged.map(_._1)
-    // discovery-frozen DV per file (absolute sidecar path)
-    val dvByFile: Map[String, String] =
-      logged.collect { case (f, Some(dv), _) => f -> dv }.toMap
-    // discovery-frozen equality residuals per file
-    val eqByFile: Map[String, Seq[String]] =
-      logged.collect { case (f, _, eq) if eq.nonEmpty => f -> eq }.toMap
+    // discovery-frozen DV (absolute sidecar path) and equality residuals
+    val deletesOf = logged.map { case (f, dv, eq) => f -> (dv, eq) }.toMap
     val footers = FlsFooters.list(files, conf)
       .map(f => f.copy(table = graft.fls.Format.applyRenames(f.table, tableSchema)))
     if (footers.length != files.length) {
@@ -280,50 +271,31 @@ class FlsMicroBatchStream(
     // stream start); values parse per file from its path
     val partTypes: Map[String, DataType] =
       tableSchema.fields.map(f => f.name -> f.dataType).toMap
-    val parts = mutable.ArrayBuffer[FlsRgUnit]()
-    footers.zipWithIndex.foreach { case (entry, fileIdx) =>
+    val planFiles = footers.map { entry =>
       val kvs = FlsPartitioning.valuesFor(bases, entry.file)
-      val pvals = kvs.toMap
       val keys = kvs.map(_._1)
       val raw = kvs.map(_._2).toArray
-      val fileTypes = partTypes.filter { case (k, _) => keys.contains(k) }
       // CONSUMED partition filters have no residual FilterExec behind
       // them: the batch planner proved every file decides them, but a
       // file landing mid-stream may not — such a file cannot be
       // processed correctly at all, so fail loudly instead of emitting
       // unfiltered rows
       consumedFilters.foreach { f =>
-        require(FlsPartitioning.evaluates(f, fileTypes, keys, raw).isDefined,
+        require(FlsPartitioning.evaluates(f, partTypes, keys, raw).isDefined,
           s"fls stream: file ${entry.file} cannot decide the consumed partition " +
             s"filter $f (layout changed mid-stream?) — restart the query or fix the layout")
       }
-      val keep = keys.isEmpty || FlsPartitioning.mayMatch(filters,
-        fileTypes, keys, raw)
-      if (keep) {
-        val table = entry.table
-        val nameToIdx = table.columns.map(_.name).zipWithIndex.toMap
-        var rowStart = 0L
-        table.rowGroups.foreach { rg =>
-          if (FlsZoneMap.mayMatch(rg, nameToIdx, table.columns, filters, rowStart)) {
-            parts += FlsRgUnit(entry.file.toString, rg, rowStart, fileIdx, pvals,
-              table.columns, dv = dvByFile.get(entry.file.toString),
-              eq = eqByFile.getOrElse(entry.file.toString, Nil))
-          }
-          rowStart += rg.nTuples
-        }
-      }
+      val (dv, eq) = deletesOf.getOrElse(entry.file.toString, (None, Nil))
+      FlsPlanFile(entry.file.toString, entry.table, keys, raw, dv, eq)
     }
-    FlsSplitPacking.pack(parts.toSeq)
+    FlsSplitPacking.pack(FlsScanPlanner.plan(planFiles, filters, partTypes,
+      readOptions.sizeVirtuals), session)
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
     new FlsReaderFactory(requiredSchema,
-      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
-      if (options.containsKey("string_dictionary"))
-        Some(options.getBoolean("string_dictionary", false)) else None,
-      rowFilters = filters, // executor-side selection vectors (FlsRowFilter)
-      filterKeepRatio = options.getDouble("filter_keep_ratio", 0.0),
-      stringDictAutoRows = options.getLong("string_dictionary_auto_rows", 512L * 1024))
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf), readOptions,
+      rowFilters = filters) // executor-side selection vectors (FlsRowFilter)
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[FlsOffset].batchId

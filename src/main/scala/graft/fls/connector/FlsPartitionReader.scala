@@ -20,43 +20,19 @@ class FlsPartitionReader(
     part: FlsInputPartition,
     readSchema: StructType,
     conf: Configuration,
-    /** Zero-copy dictionary vectors (string AND numeric/timestamp dict
-      * groups): Some(x) = forced by the `string_dictionary` option;
-      * None = SIZE-ADAPTIVE — measured at sf0.1 the eager gather wins
-      * (~19%: cache-resident data re-fetched through the dict
-      * indirection costs more than one bulk copy) while at 64× the
-      * dictionary path wins ~23% (memory-bandwidth-bound scans stop
-      * materializing n values per split). The auto rule keys on the
-      * SPLIT'S ROW COUNT — the quantity that decides whether the scan
-      * streams past cache — and serves dictionary vectors once it
-      * exceeds `stringDictAutoRows`. */
-    stringDictionary: Option[Boolean] = None,
-    /** virtual `<col>_size` name → base LIST column (see FlsVirtual). */
-    sizeBase: Map[String, String] = Map.empty,
+    opts: FlsReadOptions = FlsReadOptions(),
     /** Pushed conjuncts for executor-side selection-vector filtering
       * (see [[FlsRowFilter]]); Catalyst still re-checks them. */
-    rowFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    /** Compact a group only when at most this fraction survives.
-      * DEFAULT 0 = never compact: measured at 64× on local[32], the
-      * gather pass loses to codegen's filter over full batches at every
-      * selectivity tried (10% keep, 2-col: 0.24 vs 0.17 s; 7-col: 0.27
-      * vs 0.24 s) — a memory-bandwidth-rich single node refilters 2048-row
-      * batches faster than it gathers them. The EMPTY-group skip below
-      * stays on regardless (an all-false group skips decoding every
-      * non-filter column). On storage-bound clusters or with expensive
-      * downstream operators the trade can flip: set filter_keep_ratio
-      * (e.g. 0.5) to enable compaction. */
-    filterKeepRatio: Double = 0.0,
-    stringDictAutoRows: Long = 512L * 1024)
+    rowFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReader[ColumnarBatch] {
 
   /** Dictionary-vector decision: forced by option, or auto by this
     * split's total row count (which columns/encodings qualify is the
     * `dictable` check per column). */
-  private val useDictVectors: Boolean = stringDictionary.getOrElse {
+  private val useDictVectors: Boolean = opts.stringDictionary.getOrElse {
     var rows = 0L
     part.chunks.foreach(c => c.rowGroups.foreach(rg => rows += rg.nTuples))
-    rows >= stringDictAutoRows
+    rows >= opts.stringDictAutoRows
   }
 
   /** Multi-chunk, multi-row-group split state: `cIdx` is the current
@@ -92,7 +68,7 @@ class FlsPartitionReader(
     * drift across files). */
   private var preds: Array[FlsRowFilter.Pred] =
     if (chunk == null) Array.empty
-    else FlsRowFilter.compile(rowFilters, readSchema, fileTypes, sizeBase)
+    else FlsRowFilter.compile(rowFilters, readSchema, fileTypes, opts.sizeVirtuals)
   /** Adaptive conjunct order (reset with `preds` on chunk advance —
     * compile can drop different conjuncts per file under
     * union_by_name, so positions don't transfer). */
@@ -236,7 +212,7 @@ class FlsPartitionReader(
     def decodeCol(f: StructField, fi: Int): ColData = {
         val idx = chunk.fileColumns.indexWhere(_.name == f.name)
         if (idx < 0) {
-          sizeBase.get(f.name).map(b => chunk.fileColumns.indexWhere(_.name == b)) match {
+          opts.sizeVirtuals.get(f.name).map(b => chunk.fileColumns.indexWhere(_.name == b)) match {
             case Some(baseIdx) if baseIdx >= 0 =>
               // virtual `<col>_size`: per-row element counts, derived
               // from the base LIST column's offsets (decode shared via
@@ -502,7 +478,7 @@ class FlsPartitionReader(
       // so serving the group full would resurrect them. compact()
       // gathers every shape, nested included.
       if (selCount < rgTuples &&
-          (dvApplied || selCount <= rgTuples * filterKeepRatio)) {
+          (dvApplied || selCount <= rgTuples * opts.filterKeepRatio)) {
         var fj = 0
         while (fj < nFields) {
           val f = readSchema.fields(fj)
@@ -564,7 +540,7 @@ class FlsPartitionReader(
         emitPositions = loadEmit(chunk)
         eqExcls = mkEqExcls(chunk)
         fileTypes = mkFileTypes(chunk)
-        preds = FlsRowFilter.compile(rowFilters, readSchema, fileTypes, sizeBase)
+        preds = FlsRowFilter.compile(rowFilters, readSchema, fileTypes, opts.sizeVirtuals)
         adaptOrder = new FlsRowFilter.AdaptiveOrder(preds.length)
         segBufs = Array.fill(chunk.fileColumns.length)(new Codecs.ReuseBufs)
         gIdx = -1
@@ -1002,4 +978,48 @@ object FlsVirtual {
       case Some(s) =>
         s.split(",").map(_.trim).filter(_.nonEmpty).map(c => (c + SizeSuffix, c)).toMap
     }
+}
+
+/** The reader options every fls scan honours, parsed once per scan.
+  * Batch, micro-batch and change-feed reads all build their
+  * [[FlsReaderFactory]] from this one value.
+  *
+  * `stringDictionary`: zero-copy dictionary vectors (string AND
+  * numeric/timestamp dict groups). Some(x) = forced by the
+  * `string_dictionary` option; None = SIZE-ADAPTIVE — measured at sf0.1
+  * the eager gather wins (~19%: cache-resident data re-fetched through
+  * the dict indirection costs more than one bulk copy) while at 64× the
+  * dictionary path wins ~23% (memory-bandwidth-bound scans stop
+  * materializing n values per split). The auto rule keys on the SPLIT'S
+  * ROW COUNT — the quantity that decides whether the scan streams past
+  * cache — and serves dictionary vectors once it reaches
+  * `stringDictAutoRows` (`string_dictionary_auto_rows`).
+  *
+  * `sizeVirtuals`: virtual `<col>_size` name → base LIST column
+  * (`array_size`, see [[FlsVirtual]]).
+  *
+  * `filterKeepRatio` (`filter_keep_ratio`): compact a group only when at
+  * most this fraction survives the selection vector. DEFAULT 0 = never
+  * compact: measured at 64× on local[32], the gather pass loses to
+  * codegen's filter over full batches at every selectivity tried (10%
+  * keep, 2-col: 0.24 vs 0.17 s; 7-col: 0.27 vs 0.24 s) — a
+  * memory-bandwidth-rich single node refilters 2048-row batches faster
+  * than it gathers them. The EMPTY-group skip stays on regardless (an
+  * all-false group skips decoding every non-filter column). On
+  * storage-bound clusters or with expensive downstream operators the
+  * trade can flip: set it (e.g. 0.5) to enable compaction. */
+final case class FlsReadOptions(
+    stringDictionary: Option[Boolean] = None,
+    sizeVirtuals: Map[String, String] = Map.empty,
+    filterKeepRatio: Double = 0.0,
+    stringDictAutoRows: Long = 512L * 1024)
+
+object FlsReadOptions {
+  def parse(options: org.apache.spark.sql.util.CaseInsensitiveStringMap): FlsReadOptions =
+    FlsReadOptions(
+      if (options.containsKey("string_dictionary"))
+        Some(options.getBoolean("string_dictionary", false)) else None,
+      FlsVirtual.sizeVirtuals(options),
+      options.getDouble("filter_keep_ratio", 0.0),
+      options.getLong("string_dictionary_auto_rows", 512L * 1024))
 }

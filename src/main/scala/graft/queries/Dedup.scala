@@ -601,9 +601,15 @@ object Dedup {
     * strict upper triangle of the side-0 block (each unordered pair
     * once — the side-1 copy is ignored). Pairs emit as
     * (min id, max id, cos), the normalization the SQL plan's
-    * least/greatest applied. Matches are buffered per cell — output is
-    * a thresholded NEAR-DUP set, sparse by definition (and the prior
-    * shape buffered the same blocks, so peak memory is unchanged). */
+    * least/greatest applied.
+    *
+    * Memory: the input blocks of one cell are buffered as before, but
+    * every passing pair of the cell is ALSO buffered (`hits`) before the
+    * first one is emitted, so peak memory grows with the cell's MATCH
+    * count, not just its row count. That is small for the sparse
+    * near-dup sets this kernel is meant for, and unbounded for dense
+    * duplicates: a cell of ~64Ki near-identical vectors passes ~2e9
+    * pairs and OOMs the executor instead of streaming them. */
   private val TileJ = 256
 
   private def flatRows(vs: scala.collection.mutable.ArrayBuffer[Array[Double]],

@@ -2,8 +2,9 @@ package graft.fls
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -98,6 +99,27 @@ class FlsArraySizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(count(lit(1)), min("id"), max("id")).collect()(0)
     assert(got.getLong(0) == 1024)
     assert(got.getLong(1) == 5 * 1024 && got.getLong(2) == 6 * 1024 - 1)
+  }
+
+  test("a streaming read honours array_size like the batch read") {
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.select("id", "v_size").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val batch = spark.read.format("fls").option("array_size", "v").load(varDir)
+    def stream(q: DataFrame => DataFrame): Seq[(Long, Long)] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+      val s = q(spark.readStream.format("fls").schema(batch.schema)
+        .option("array_size", "v").load(varDir))
+        .writeStream
+        .foreachBatch { (b: DataFrame, _: Long) => rows(b).foreach(got.add) }
+        .option("checkpointLocation",
+          Files.createTempDirectory("fls-asize-ckpt").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      s.awaitTermination()
+      import scala.jdk.CollectionConverters._
+      got.iterator().asScala.toSeq.sorted
+    }
+    assert(stream(identity) == rows(batch))
+    assert(stream(_.where("v_size = 3")).length == 1024)
   }
 
   test("footer round-trips element-count stats") {
