@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.fls.{FlsDeleteVectors, FlsFileStats, FlsFooters, FlsManifest, Format}
 
@@ -503,5 +502,5 @@ class FlsCdfScan(fullSchema: StructType, requiredSchema: StructType,
     new FlsCdfMicroBatchStream(fullSchema, requiredSchema, options, session)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema, new SerializableConfiguration(hadoopConf), readOptions)
+    new FlsReaderFactory(requiredSchema, FlsJobConf(session, hadoopConf), readOptions)
 }

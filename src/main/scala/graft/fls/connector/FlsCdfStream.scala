@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.fls.FlsManifest
 
@@ -138,7 +137,7 @@ class FlsCdfMicroBatchStream(
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema, new SerializableConfiguration(hadoopConf), readOptions)
+    new FlsReaderFactory(requiredSchema, FlsJobConf(session, hadoopConf), readOptions)
 
   /** Nothing to do: the manifest log is the WAL and Spark's own offset
     * log is the cursor — this source holds no files to compact. */

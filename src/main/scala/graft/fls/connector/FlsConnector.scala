@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -736,6 +737,16 @@ class FlsRowsFilteredMetric
   override def name(): String = "flsRowsFiltered"
   override def description(): String = "rows dropped by scan-side filters"
 }
+class FlsRowGroupsTotalMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "rowGroupsTotal"
+  override def description(): String = "row groups in listed files"
+}
+class FlsRowGroupsPrunedMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "rowGroupsPruned"
+  override def description(): String = "row groups pruned at planning"
+}
 
 class FlsScan(
     tableSchema: StructType,
@@ -823,7 +834,10 @@ class FlsScan(
       (if (limit >= 0) s", limit=$limit" else "") +
       topN.map(t => s", topN=(${t.col},${if (t.desc) "DESC" else "ASC"},${t.n})").getOrElse("")
 
-  private def hadoopConf: Configuration =
+  /** One copy per scan: listing, partition discovery and the shipped
+    * broadcast all use it (the scan is per query, so session conf
+    * changes after construction are not its concern). */
+  private lazy val hadoopConf: Configuration =
     session.sessionState.newHadoopConf()
 
   private lazy val scanEntries: Seq[graft.fls.FlsFooters.Entry] =
@@ -875,7 +889,20 @@ class FlsScan(
     * fresh birth version would carry them OUT of its scope. */
   private[connector] var onPlannedEq: Option[Set[String] => Unit] = None
 
+  /** Row groups in the partitions of the latest planning (runtime
+    * filters re-plan), for [[reportDriverMetrics]]; -1 before any. */
+  @volatile private var plannedRowGroups = -1L
+
   override def planInputPartitions(): Array[InputPartition] = {
+    val parts = packPartitions()
+    plannedRowGroups = parts.iterator.map {
+      case p: FlsInputPartition => p.chunks.map(_.rowGroups.length.toLong).sum
+      case _ => 0L
+    }.sum
+    parts
+  }
+
+  private def packPartitions(): Array[InputPartition] = {
     val units = FlsScanPlanner.plan(planFiles, filters ++ runtimeFilters, partTypes,
       readOptions.sizeVirtuals, wholeFile = groupGranularity)
     // row-level ops capture the planned files and their scan-time DV
@@ -971,7 +998,7 @@ class FlsScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FlsReaderFactory(readSchema(), new SerializableConfiguration(hadoopConf), readOptions,
+    new FlsReaderFactory(readSchema(), FlsJobConf(session, hadoopConf), readOptions,
       // executor-side selection vectors: static + runtime (DPP) conjuncts
       // (OFF in group-granularity mode — the replace write needs every
       // row of the kept files back)
@@ -981,7 +1008,23 @@ class FlsScan(
     * /root/reference/src/reader/fls_reader.cpp:556-558 — Spark surfaces
     * these in the UI/listener instead of a polled percentage). */
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new FlsRowGroupsMetric, new FlsRowsMetric, new FlsRowsFilteredMetric)
+    Array(new FlsRowGroupsMetric, new FlsRowsMetric, new FlsRowsFilteredMetric,
+      new FlsRowGroupsTotalMetric, new FlsRowGroupsPrunedMetric)
+
+  /** Planning-side counts: the row groups of the listed files, and how
+    * many of them no input partition reads (partition, zone-map, TopN
+    * and limit pruning together). Tasks report the read side
+    * (`rowGroupsRead`), so pruned + read = total. */
+  override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    if (plannedRowGroups < 0) Array.empty
+    else {
+      val total = scanEntries.map(_.table.rowGroups.length.toLong).sum
+      def metric(n: String, v: Long) = new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }
+      Array(metric("rowGroupsTotal", total), metric("rowGroupsPruned", total - plannedRowGroups))
+    }
 
   override def estimateStatistics(): Statistics = new Statistics {
     // explicit_cardinality named option overrides the footer count
@@ -1209,7 +1252,7 @@ object FlsSplitPacking {
   }
 }
 
-class FlsReaderFactory(readSchema: StructType, conf: SerializableConfiguration,
+class FlsReaderFactory(readSchema: StructType, conf: Broadcast[SerializableConfiguration],
     opts: FlsReadOptions, rowFilters: Array[Filter] = Array.empty)
   extends PartitionReaderFactory {
 
@@ -1220,7 +1263,7 @@ class FlsReaderFactory(readSchema: StructType, conf: SerializableConfiguration,
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new FlsPartitionReader(partition.asInstanceOf[FlsInputPartition], readSchema, conf.value,
+    new FlsPartitionReader(partition.asInstanceOf[FlsInputPartition], readSchema, conf.value.value,
       opts, rowFilters)
 }
 
@@ -1630,7 +1673,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       }
     }
     FlsWriterFactory(path, info.schema(), rowGroupSize, rowGroupsPerFile,
-      new SerializableConfiguration(conf), writeId, inlineFooter, transpose,
+      FlsJobConf(session, conf), writeId, inlineFooter, transpose,
       partitionBy, maxOpenPartitions, manifestMode, ndvColumns,
       bloomColumns, bloomFpp)
   }
@@ -2042,7 +2085,7 @@ case class FlsWriterFactory(
     schema: StructType,
     rowGroupSize: Int,
     rowGroupsPerFile: Int,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     writeId: String,
     inlineFooter: Boolean = true,
     transpose: Boolean = false,
@@ -2062,7 +2105,7 @@ case class FlsWriterFactory(
     // so twins write disjoint final files and only the committed
     // attempt's names enter the manifest.
     new FlsDataWriter(dir, schema, rowGroupSize, rowGroupsPerFile,
-      conf.value,
+      conf.value.value,
       if (directWrite) f"part-$partitionId%05d-$writeId-$taskId"
       else f"part-$partitionId%05d-$writeId",
       s"$writeId/attempt-$partitionId-$taskId", inlineFooter, transpose,

@@ -557,7 +557,7 @@ object FlsDelete {
           val oldDvByIdx: Map[Int, String] =
             entryByIdx.flatMap { case (i, e) => dvAbs(e).map(i -> _) }
           val rootStr = root.toString
-          val hconfSer = new org.apache.spark.util.SerializableConfiguration(conf)
+          val shipped = FlsJobConf(spark, conf)
           val sp = spark
           import sp.implicits._
           val dvRows: Array[(Int, String)] = matchedDf
@@ -565,7 +565,7 @@ object FlsDelete {
             .repartition(col("fi"))
             .sortWithinPartitions(col("fi"), col("fp"))
             .mapPartitions { it =>
-              val tconf = hconfSer.value
+              val tconf = shipped.value.value
               val rootP = new Path(rootStr)
               val tfs = rootP.getFileSystem(tconf)
               val attempt = Option(org.apache.spark.TaskContext.get())

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicReference
 
 import scala.collection.mutable
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -12,7 +13,6 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.fls.{FlsDeleteVectors, FlsFileStats, FlsManifest, Format}
 
@@ -149,11 +149,11 @@ class FlsDeltaBatchWrite(info: LogicalWriteInfo,
         "schema — the operation declared (_fls_file, _fls_pos)"))
     val fileIdx = rowIdSchema.fieldIndex(FlsVirtual.MetaFile)
     val posIdx = rowIdSchema.fieldIndex(FlsVirtual.MetaPos)
-    val hconfSer = new SerializableConfiguration(session.sessionState.newHadoopConf())
+    val hconf = session.sessionState.newHadoopConf()
     val inner = FlsWriterFactory(dir, info.schema(),
       tableOptions.getInt("row_group_size", Format.DefaultRowGroupSize),
       tableOptions.getInt("row_groups_per_file", 0),
-      hconfSer,
+      FlsJobConf(session, hconf),
       writeId,
       inlineFooter = tableOptions.getBoolean("inline_footer", true),
       transpose = tableOptions.getBoolean("transpose", false),
@@ -165,14 +165,14 @@ class FlsDeltaBatchWrite(info: LogicalWriteInfo,
     // factory), so the DV-pointer snapshot is complete — ship it so
     // tasks can merge each target's OLD vector into the one they write
     val root = new Path(dir)
-    val fs = root.getFileSystem(hconfSer.value)
+    val fs = root.getFileSystem(hconf)
     val qdir = fs.makeQualified(root).toString.stripSuffix("/") + "/"
     // CDC mode routes matched-update rows to their OWN files (whole
     // files tag `update_postimage` in the feed — no per-row position
     // bookkeeping on the insert side); the "c" writeId suffix keeps the
     // two writers' attempt-unique final names disjoint
     val postInner = if (cdc) Some(inner.copy(writeId = writeId + "c")) else None
-    FlsDeltaWriterFactory(inner, fileIdx, posIdx, dir, qdir, hconfSer,
+    FlsDeltaWriterFactory(inner, fileIdx, posIdx, dir, qdir,
       writeId, scanDvs(), postInner)
   }
 
@@ -386,7 +386,7 @@ class FlsDeltaBatchWrite(info: LogicalWriteInfo,
 
 case class FlsDeltaWriterFactory(inner: FlsWriterFactory,
     fileIdx: Int, posIdx: Int, rootStr: String, qdir: String,
-    hconfSer: SerializableConfiguration, writeId: String,
+    writeId: String,
     scanDvsAbs: Map[String, String],
     /** CDC mode: matched-update rows go to this second data writer so
       * whole files tag `update_postimage` in the feed. */
@@ -397,7 +397,7 @@ case class FlsDeltaWriterFactory(inner: FlsWriterFactory,
     // (nothing will ever be inserted) that the data writer rightly
     // refuses — instantiate it on the first actual insert
     new FlsDeltaWriter(() => inner.createWriter(partitionId, taskId),
-      fileIdx, posIdx, rootStr, qdir, hconfSer, writeId, scanDvsAbs,
+      fileIdx, posIdx, rootStr, qdir, inner.conf.value.value, writeId, scanDvsAbs,
       partitionId, postInner.map(f => () => f.createWriter(partitionId, taskId)))
 }
 
@@ -413,7 +413,7 @@ case class FlsDeltaWriterFactory(inner: FlsWriterFactory,
   * by the positions of its own files (≤ rows per file). */
 class FlsDeltaWriter(mkInner: () => DataWriter[InternalRow],
     fileIdx: Int, posIdx: Int, rootStr: String, qdir: String,
-    hconfSer: SerializableConfiguration, writeId: String,
+    conf: Configuration, writeId: String,
     scanDvsAbs: Map[String, String], partitionId: Int,
     /** CDC mode when defined: update() routes its positions/rows to
       * separate tracking so the commit can record the merge's
@@ -462,7 +462,6 @@ class FlsDeltaWriter(mkInner: () => DataWriter[InternalRow],
   override def commit(): WriterCommitMessage = {
     val ins = commitOf(inner)
     val postIns = commitOf(post)
-    val conf = hconfSer.value
     val root = new Path(rootStr)
     val fs = root.getFileSystem(conf)
     val attempt = Option(org.apache.spark.TaskContext.get())
@@ -507,7 +506,7 @@ class FlsDeltaWriter(mkInner: () => DataWriter[InternalRow],
     if (inner != null) inner.abort()
     if (post != null) post.abort()
     val root = new Path(rootStr)
-    val fs = root.getFileSystem(hconfSer.value)
+    val fs = root.getFileSystem(conf)
     wrote.foreach(r =>
       try fs.delete(new Path(root, r), false) catch { case _: Throwable => () })
   }

@@ -293,8 +293,7 @@ class FlsMicroBatchStream(
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema,
-      new org.apache.spark.util.SerializableConfiguration(hadoopConf), readOptions,
+    new FlsReaderFactory(requiredSchema, FlsJobConf(session, hadoopConf), readOptions,
       rowFilters = filters) // executor-side selection vectors (FlsRowFilter)
 
   override def commit(end: Offset): Unit = {

@@ -281,7 +281,30 @@ class FlsPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Map.of("path", dir)))
     assert(scan.supportedCustomMetrics().map(_.name()).toSeq ==
-      Seq("rowGroupsRead", "flsRowsRead", "flsRowsFiltered"))
+      Seq("rowGroupsRead", "flsRowsRead", "flsRowsFiltered", "rowGroupsTotal", "rowGroupsPruned"))
+  }
+
+  test("driver metrics: pruned + read = total row groups, pruned = 0 without a filter") {
+    val dir = s"$tmp/pruned"
+    // one file of 8 id-sorted 1024-row groups, each a disjoint id range
+    spark.range(0, 8192, 1, 1).selectExpr("id AS v")
+      .write.format("fls").mode("overwrite").option("row_group_size", "1024").save(dir)
+    def counts(cond: Option[String]): (Long, Long, Long, Long) = {
+      val base = spark.read.format("fls").load(dir)
+      val df = cond.fold(base)(base.filter)
+      val rows = df.collect().length.toLong
+      val scan = df.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.get
+      def m(n: String) = scan.metrics(n).value
+      (rows, m("rowGroupsTotal"), m("rowGroupsPruned"), m("rowGroupsRead"))
+    }
+    val (all, total, pruned0, read0) = counts(None)
+    assert(all == 8192 && total == 8 && pruned0 == 0 && read0 == 8, (total, pruned0, read0))
+    // v in [1500, 2600) touches groups [1024, 2048) and [2048, 3072) only
+    val (some, total1, pruned1, read1) = counts(Some("v >= 1500 AND v < 2600"))
+    assert(some == 1100 && total1 == 8)
+    assert(pruned1 == 6 && pruned1 + read1 == total1, (total1, pruned1, read1))
   }
 
   test("string zone maps prune row groups for equality, range, and prefix filters") {
